@@ -1386,15 +1386,14 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "2100").toInt
     val deadlineNanos = benchStart + budgetSec * 1000000000L
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
     // ambient load BEFORE any Spark work: the only load reading that
     // distinguishes external contention from our own worker threads.
     // r16 (VERDICT r15 item 3): a degraded START window inflates every
     // suite number at once — the r15 round compared a load-18 window
     // against a load-12.6 one and every untouched query read -18%.
     // Rather than bank a poisoned anchor, wait (bounded: 20 s samples,
-    // at most min(240 s, 10% of the wall budget)) for the ambient load
+    // the last one cut short at the wait deadline, at most
+    // min(240 s, 10% of the wall budget)) for the ambient load
     // to clear the flag threshold; the wait is charged against the
     // same global budget, so a persistently-loaded host degrades to
     // exactly the old behavior plus one stderr warning.
@@ -1406,32 +1405,19 @@ object Bench {
         System.err.println(f"[bench] ambient load $load%.1f > " +
           f"$LoadFlagThreshold%.0f at start - waiting up to " +
           s"${waitBudgetSec}s for a quieter window")
-        while (load > LoadFlagThreshold && System.nanoTime() < waitDeadline) {
-          Thread.sleep(20000)
+        var leftMs = (waitDeadline - System.nanoTime()) / 1000000L
+        while (load > LoadFlagThreshold && leftMs > 0) {
+          Thread.sleep(math.min(20000L, leftMs))
           load = loadAvg1m
+          leftMs = (waitDeadline - System.nanoTime()) / 1000000L
         }
         System.err.println(f"[bench] proceeding at ambient load $load%.1f")
       }
       load
     }
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      // bench numbers are measured THROUGH the occupied transport seam
-      // (delegating manager), same as Verify — recorded in the artifact
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.GraftShuffleManager")
-      // measured default from the codec/block-size matrix
-      // (SHUFFLE_TUNING.md): snappy/128k won the heavy-shuffle family
-      .config("spark.io.compression.codec", "snappy")
-      .config("spark.io.compression.snappy.blockSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // bench numbers are measured THROUGH the occupied transport seam,
+    // same as Verify — recorded in the artifact
+    val spark = Sessions.bench()
     // three runs per query, min reported: the first run absorbs plan
     // compilation; min-of-3 defends against transient host stalls that a
     // min-of-2 inside one contended window cannot (round 3's 268 s

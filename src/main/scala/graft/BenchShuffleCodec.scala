@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * STATIC per SparkEnv (`spark.io.compression.codec`, per-codec
   * `blockSize`, `spark.shuffle.compress`), so each matrix cell gets a
   * fresh SparkContext, runs the five heaviest shuffle queries of the
-  * suite min-of-2, and the winner becomes the committed default in the
-  * bench/verify session builders.
+  * suite min-of-2, and the winner becomes the committed default in
+  * [[Sessions]].
   *
   * Usage: BenchShuffleCodec [sfDir]  (default /root/testdata/sf0.1)
   * Writes SHUFFLE_TUNING.md + bench_shuffle_codec.json to the repo dir.
@@ -33,8 +33,7 @@ object BenchShuffleCodec {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
+    val cpus = Sessions.defaultCpus
     val repoDir = sys.env.getOrElse("SPARK_GRAFT_REPO_DIR", "/root/repo")
 
     val cells =
@@ -46,16 +45,9 @@ object BenchShuffleCodec {
       .getOperatingSystemMXBean.getSystemLoadAverage
 
     val results = cells.map { cell =>
-      val b = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .config("spark.shuffle.manager",
-          "org.apache.spark.shuffle.graft.GraftShuffleManager")
-        .config("spark.ui.enabled", "false")
+      // codec settings are static per SparkEnv: each cell overrides
+      // the bench session's snappy/128k default in a fresh context
+      val b = Sessions.builder(cpus)
         .config("spark.shuffle.compress", cell.compress.toString)
         .config("spark.shuffle.spill.compress", cell.compress.toString)
         .config("spark.io.compression.codec", cell.codec)
@@ -122,8 +114,8 @@ object BenchShuffleCodec {
     val footer =
       s"""!
          !Chosen default: **${winner._1.label}** (lowest total across the
-         !heavy-shuffle family) — set in the Bench/Verify/RunScale
-         !session builders. Compression beats uncompressed even on
+         !heavy-shuffle family) — set in `graft.Sessions`, the one
+         !session definition. Compression beats uncompressed even on
          !local disk (shuffle-byte savings outweigh codec CPU); snappy
          !edges lz4 at every block size on this suite, and zstd's
          !deeper compression does not pay at local-disk latencies — on

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev utility: print `.explain("formatted")` for named queries under
   * the SAME session conf as graft.Bench (shuffle width, AQE, 64MB
@@ -8,18 +7,7 @@ import org.apache.spark.sql.SparkSession
   * 4 shuffle partitions flipped join strategies vs the measured plan. */
 object ExplainOne {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir).master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.GraftShuffleManager")
-      .config("spark.io.compression.codec", "snappy")
-      .config("spark.io.compression.snappy.blockSize", "128k")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.bench()
     spark.sparkContext.setLogLevel("ERROR")
     args.tail.foreach { n =>
       println(s"===== $n =====")

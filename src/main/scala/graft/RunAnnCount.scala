@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: count the bounded-ANN candidate stream at a fixture —
@@ -11,15 +10,7 @@ import org.apache.spark.sql.functions._
 object RunAnnCount {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/repo/target/scale/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
     import graft.similarity.Ann
     import graft.vector.VectorFunctions
     val (dim, bits, bands, numSigs, maxBucket) = (64, 64, 8, 16, 64)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: direct-count adjudication of the q_fuzzy_join scale
   * legs — the [[RunGraphCount]] pattern applied to the last ≥1.0
   * anchor exponent (r11: 1.06 wall / 1.03 3-pt / 1.02 CPU at clean
@@ -22,15 +20,7 @@ object RunFuzzyCount {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1",
         "/root/repo/target/scale/sf1", "/root/repo/target/scale/sf3")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
 
     val rows = dirs.map { d =>
       val c = ScaleCounts.fuzzy(spark, d)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: direct-count adjudication of the graph scale legs
   * (q_triangles, q_label_prop) — the [[RunAnnCount]] pattern. Wall
   * clocks on this host lie under hypervisor stalls, but the WORKLOAD of
@@ -33,15 +31,7 @@ object RunGraphCount {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1",
         "/root/repo/target/scale/sf1", "/root/repo/target/scale/sf3")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
 
     val rows = dirs.map { d =>
       val c = ScaleCounts.graph(spark, d)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: bench-methodology timing for named queries — the exact
   * Bench session conf (shuffle partitions = cpus, AQE, 64MB broadcast,
   * graft shuffle manager, snappy/128k), noop-sink forcing, N round-robin
@@ -15,22 +13,8 @@ object RunQuick {
     val sfDir = args.head
     val qs = args.tail.toSeq
     require(qs.nonEmpty, "name at least one query")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.GraftShuffleManager")
-      .config("spark.io.compression.codec", "snappy")
-      .config("spark.io.compression.snappy.blockSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
     val runs = collection.mutable.LinkedHashMap[String, Vector[Double]]()
       .withDefaultValue(Vector.empty)
     val cpuBean = java.lang.management.ManagementFactory

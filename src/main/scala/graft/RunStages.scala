@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run one registry query with a per-stage metrics
   * listener — executor run/CPU time, shuffle bytes, spill, GC — the
   * fastest way to find WHICH exchange or join a regression lives in
@@ -10,21 +8,7 @@ import org.apache.spark.sql.SparkSession
 object RunStages {
   def main(args: Array[String]): Unit = {
     val q = args(0); val d = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.GraftShuffleManager")
-      .config("spark.io.compression.codec", "snappy")
-      .config("spark.io.compression.snappy.blockSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
     // per-stage max task duration (from task ends): run=cpu sums hide
     // whether a stage was 32 balanced tasks or one serialized straggler
     // — the r12 fuzzy-join find (a 31 s single-task eval stage) is

@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: run the bench's streaming rate/state measurement
   * standalone and print the artifact JSON body.
   * Usage: RunStreamBench [sfDir] */
 object RunStreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
     println(Bench.streamingMetrics(spark, sfDir, "dev")
       .map(b => s"{$b}").getOrElse("FAILED"))
     spark.stop()

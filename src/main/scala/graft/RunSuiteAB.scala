@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: A/B a session conf across named suite queries at one
   * fixture, interleaved round-robin (configA pass, configB pass, ×N) so
   * a host stall inflates one pass of both arms instead of one whole
@@ -13,22 +11,8 @@ object RunSuiteAB {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, confKey, valueA, valueB, qs @ _*) = args: @unchecked
     require(qs.nonEmpty, "name at least one query")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .config("spark.local.dir", LocalDirs.dir)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-      .config("spark.shuffle.manager",
-        "org.apache.spark.shuffle.graft.GraftShuffleManager")
-      .config("spark.io.compression.codec", "snappy")
-      .config("spark.io.compression.snappy.blockSize", "128k")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.bench()
     val runs = collection.mutable.Map[(String, String), Vector[Double]]()
       .withDefaultValue(Vector.empty)
     (1 to nRuns).foreach { pass =>

@@ -108,7 +108,7 @@ object Analytics {
     // ReuseExchange: written once) and doubles as the pair-generation
     // parallelizer; at lake scale the join's SMJ needs exactly this
     // partitioning, so the plan there also drops one full exchange.
-    // A/B at sf0.1 (RunProbe, min-of-4, same window): 2.14 s -> 0.99 s
+    // A/B at sf0.1 (min-of-4, same window): 2.14 s -> 0.99 s
     // for the identical 1,196,000-edge set.
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey").as("ok"),
@@ -123,6 +123,20 @@ object Analytics {
       .select(col("x.pk").as("a"), col("y.pk").as("b")).distinct()
       .localCheckpoint()
   }
+
+  /** Label-prop's argmax key: (n desc, label asc) is the lexicographic
+    * order of n·2^32 + (Int.MaxValue − label). Labels are ints ≥ 0, so
+    * the pack fits a long exactly while n < 2^31; a larger count raises
+    * instead of wrapping, like the node-id guard in [[copurchaseEdges]]. */
+  private[graft] def packArgmax(n: Column, label: Column): Column =
+    when(n < lit(1L << 31),
+      n * lit(1L << 32) + (lit(Int.MaxValue.toLong) - label))
+      .otherwise(raise_error(lit(
+        "label-prop argmax: neighbor count exceeds 2^31 - 1")).cast("long"))
+
+  /** The label a [[packArgmax]] key encodes. */
+  private[graft] def unpackArgmaxLabel(packed: Column): Column =
+    (lit(Int.MaxValue.toLong) - packed % lit(1L << 32)).cast("int")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -738,17 +752,12 @@ object Analytics {
           .repartition(col("src"))
           .groupBy(col("src"), col("label")).agg(count(lit(1)).as("n"))
           // argmax as ONE scalar max over a packed BIGINT (r16, guide
-          // §4): (n desc, label asc) is the lexicographic order of
-          // n·2^32 + (Int.MaxValue − label) — labels are ints ≥ 0 and
-          // n ≤ 2^31, so the pack cannot overflow a long and the max
-          // is bit-equivalent to the old struct max_by, without
-          // allocating/comparing a struct per row.
+          // §4): bit-equivalent to the old struct max_by, without
+          // allocating/comparing a struct per row
           .groupBy(col("src"))
-          .agg(max(col("n") * lit(4294967296L) +
-            (lit(Int.MaxValue.toLong) - col("label"))).as("packed"))
+          .agg(max(packArgmax(col("n"), col("label"))).as("packed"))
           .select(col("src").as("node"),
-            (lit(Int.MaxValue.toLong) - col("packed") % lit(4294967296L))
-              .cast("int").as("label"))
+            unpackArgmaxLabel(col("packed")).as("label"))
           .localCheckpoint()
       }
       labels.groupBy(col("label")).agg(count(lit(1)).as("n_members"))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.queries.Analytics
 
 /** Pins the r16 graph-family optimizations:
   *
@@ -66,14 +67,29 @@ class GraphFamilySpec extends SparkSuite {
       .agg(max_by(col("label"),
         struct(col("n"), (-col("label")).as("nl"))).as("label"))
     val viaPacked = rows.groupBy(col("src"))
-      .agg(max(col("n") * lit(4294967296L) +
-        (lit(Int.MaxValue.toLong) - col("label"))).as("packed"))
-      .select(col("src"),
-        (lit(Int.MaxValue.toLong) - col("packed") % lit(4294967296L))
-          .cast("int").as("label"))
+      .agg(max(Analytics.packArgmax(col("n"), col("label"))).as("packed"))
+      .select(col("src"), Analytics.unpackArgmaxLabel(col("packed")).as("label"))
     val a = viaStruct.collect().map(r => (r.getInt(0), r.getInt(1))).sorted
     val b = viaPacked.collect().map(r => (r.getInt(0), r.getInt(1))).sorted
     assert(a.sameElements(b), s"argmax diverges: ${a.toSeq} vs ${b.toSeq}")
+  }
+
+  test("packed argmax: n = 2^31 - 1 round-trips exactly, n = 2^31 raises") {
+    import spark.implicits._
+    def roundTrip(n: Long, label: Int): (Long, Int) = {
+      val r = Seq((n, label)).toDF("n", "label")
+        .select(Analytics.packArgmax(col("n"), col("label")).as("packed"))
+        .select(shiftright(col("packed"), 32),
+          Analytics.unpackArgmaxLabel(col("packed")))
+        .head()
+      (r.getLong(0), r.getInt(1))
+    }
+    val top = Int.MaxValue.toLong
+    for (label <- Seq(0, 1, Int.MaxValue))
+      assert(roundTrip(top, label) == ((top, label)))
+    val e = intercept[Exception](roundTrip(top + 1, 0))
+    assert(e.getMessage.contains("neighbor count exceeds 2^31 - 1"),
+      e.getMessage)
   }
 
   test("graph queries are result-identical when the guard falls back") {

@@ -52,6 +52,26 @@ class ShuffleSeamSpec extends AnyFunSuite {
     }
   }
 
+  test("the bench session's seam is a SortShuffleManager (no-copy exchange path)") {
+    import org.apache.spark.shuffle.graft.ActiveShuffleManager
+    SparkSession.getActiveSession.foreach(_.stop())
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val spark = Sessions.builder(cpus = 4).getOrCreate()
+    try {
+      assert(ActiveShuffleManager.className ==
+        "org.apache.spark.shuffle.graft.GraftShuffleManager")
+      // ShuffleExchangeExec copies every row before the shuffle write
+      // unless the active manager is a SortShuffleManager
+      assert(ActiveShuffleManager.isSortShuffle,
+        "the seam must subclass SortShuffleManager")
+    } finally {
+      spark.stop()
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+    }
+  }
+
   test("ifile write commits exactly-once under first-attempt task failures") {
     SparkSession.getActiveSession.foreach(_.stop())
     SparkSession.clearActiveSession()

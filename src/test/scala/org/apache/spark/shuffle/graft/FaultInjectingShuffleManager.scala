@@ -2,8 +2,8 @@ package org.apache.spark.shuffle.graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.{ShuffleDependency, SparkConf, TaskContext}
-import org.apache.spark.shuffle.{ShuffleBlockResolver, ShuffleHandle, ShuffleManager, ShuffleReader, ShuffleReadMetricsReporter, ShuffleWriter, ShuffleWriteMetricsReporter}
+import org.apache.spark.{SparkConf, SparkEnv, TaskContext}
+import org.apache.spark.shuffle.{ShuffleHandle, ShuffleReader, ShuffleReadMetricsReporter}
 import org.apache.spark.shuffle.sort.SortShuffleManager
 
 /** Test-only fault injector for the shuffle seam: the first
@@ -27,20 +27,16 @@ object FaultInjection {
   def arm(n: Int): Unit = { remaining.set(n); injected.set(0) }
 }
 
+/** The active SparkEnv's shuffle manager, for specs outside this
+  * package (the SPI and `SparkEnv.shuffleManager` are `private[spark]`). */
+object ActiveShuffleManager {
+  def className: String = SparkEnv.get.shuffleManager.getClass.getName
+  def isSortShuffle: Boolean =
+    SparkEnv.get.shuffleManager.isInstanceOf[SortShuffleManager]
+}
+
 private[spark] class FaultInjectingShuffleManager(conf: SparkConf)
-    extends ShuffleManager {
-
-  private val delegate = new SortShuffleManager(conf)
-
-  override def registerShuffle[K, V, C](
-      shuffleId: Int,
-      dependency: ShuffleDependency[K, V, C]): ShuffleHandle =
-    delegate.registerShuffle(shuffleId, dependency)
-
-  override def getWriter[K, V](
-      handle: ShuffleHandle, mapId: Long, context: TaskContext,
-      metrics: ShuffleWriteMetricsReporter): ShuffleWriter[K, V] =
-    delegate.getWriter(handle, mapId, context, metrics)
+    extends GraftShuffleManager(conf) {
 
   override def getReader[K, C](
       handle: ShuffleHandle,
@@ -48,13 +44,13 @@ private[spark] class FaultInjectingShuffleManager(conf: SparkConf)
       startPartition: Int, endPartition: Int,
       context: TaskContext,
       metrics: ShuffleReadMetricsReporter): ShuffleReader[K, C] = {
-    val inner = delegate.getReader[K, C](handle, startMapIndex, endMapIndex,
+    val inner = super.getReader[K, C](handle, startMapIndex, endMapIndex,
       startPartition, endPartition, context, metrics)
     if (FaultInjection.remaining.getAndDecrement() > 0) {
       FaultInjection.injected.incrementAndGet()
       new ShuffleReader[K, C] {
         override def read(): Iterator[Product2[K, C]] = {
-          // fail mid-stream, not at open: the delegate's fetch really
+          // fail mid-stream, not at open: the inherited fetch really
           // starts, then the task dies after consuming a record — the
           // ugliest point in the reference's failure window
           val it = inner.read()
@@ -65,12 +61,4 @@ private[spark] class FaultInjectingShuffleManager(conf: SparkConf)
       }
     } else inner
   }
-
-  override def unregisterShuffle(shuffleId: Int): Boolean =
-    delegate.unregisterShuffle(shuffleId)
-
-  override def shuffleBlockResolver: ShuffleBlockResolver =
-    delegate.shuffleBlockResolver
-
-  override def stop(): Unit = delegate.stop()
 }
