@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.apache.spark.sql.functions._
 
 /** Measured-size admission for forced dimension-table broadcasts.
@@ -68,11 +69,16 @@ object BroadcastGuard {
     * definition the small side, and re-registering data UNDER a cached
     * plan's path mid-session is already undefined behavior for Spark's
     * own FileIndex caches — tests that regenerate fixtures in place
-    * call [[clearCache]]. */
+    * call [[clearCache]]. Only keys that can hit again are stored: a
+    * plan that reads an RDD (a per-invocation checkpoint) without a
+    * `memoKey` never canonicalizes equal to a later call's, so it is
+    * sized every call and kept out of the map. */
   private val sized = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, Any, String), (DataFrame, Long)]()
 
   private[graft] def clearCache(): Unit = sized.clear()
+
+  private[graft] def memoEntries: Int = sized.size()
 
   /** The dim table ready to stand as the build side of an equi-join:
     * `broadcast(...)` when its measured payload fits under half the
@@ -94,7 +100,10 @@ object BroadcastGuard {
     * ([[graft.sources.StandingIndex.tag]] — sizes+mtimes), so an
     * in-place fixture regeneration mints a new key instead of serving
     * the stale pinned dim; the plan-keyed path keeps the weaker
-    * immutable-path contract (its key embeds the path only). */
+    * immutable-path contract (its key embeds the path only). Without a
+    * `memoKey`, a dim whose plan reads an RDD is pinned and sized on
+    * every call and not memoized, so its checkpoint lives only as long
+    * as the caller's plan. */
   def dim(table: DataFrame, payloadBytesPerRow: Column,
           label: String, memoKey: Option[String] = None): DataFrame = {
     val spark = table.sparkSession
@@ -102,25 +111,34 @@ object BroadcastGuard {
       .get(MaxBytesKey, DefaultMaxBytes.toString).toLong
     val effMax = ceiling / 2
     if (effMax >= Long.MaxValue / 4) return broadcast(table)
-    val key = (spark,
-      memoKey.getOrElse(table.queryExecution.analyzed.canonicalized),
-      payloadBytesPerRow.toString)
     // one materialization serves the sizing aggregate AND the join —
     // without it the guard would re-run the (possibly corpus-wide)
-    // aggregate that produced the dim table. The sizing job runs
-    // OUTSIDE the map and installs via putIfAbsent (ADVICE r14):
-    // computeIfAbsent would hold the bin lock across a multi-second
-    // Spark job — key-colliding concurrent dim() calls would serialize
-    // behind it and a re-entrant guard use would deadlock. The cost is
-    // a rare duplicate sizing pass, whose loser unpersists its
-    // checkpoint blocks.
-    val cached = sized.get(key)
-    val (pinned, bytes) = if (cached != null) cached else {
+    // aggregate that produced the dim table
+    def pinAndSize(): (DataFrame, Long) = {
       val p = table.localCheckpoint()
       val row = p.agg(sum(payloadBytesPerRow.cast("long")).as("b")).head()
-      val v = (p, if (row.isNullAt(0)) 0L else row.getLong(0))
-      val prev = sized.putIfAbsent(key, v)
-      if (prev != null) { p.unpersist(); prev } else v
+      (p, if (row.isNullAt(0)) 0L else row.getLong(0))
+    }
+    val plan = table.queryExecution.analyzed
+    val perInvocation = memoKey.isEmpty && plan.exists {
+      case _: LogicalRDD | _: ExternalRDD[_] => true
+      case _ => false
+    }
+    // The memoized sizing job runs OUTSIDE the map and installs via
+    // putIfAbsent (ADVICE r14): computeIfAbsent would hold the bin lock
+    // across a multi-second Spark job — key-colliding concurrent dim()
+    // calls would serialize behind it and a re-entrant guard use would
+    // deadlock. The cost is a rare duplicate sizing pass, whose loser
+    // unpersists its checkpoint blocks.
+    val (pinned, bytes) = if (perInvocation) pinAndSize() else {
+      val key = (spark, memoKey.getOrElse(plan.canonicalized),
+        payloadBytesPerRow.toString)
+      val cached = sized.get(key)
+      if (cached != null) cached else {
+        val v = pinAndSize()
+        val prev = sized.putIfAbsent(key, v)
+        if (prev != null) { v._1.unpersist(); prev } else v
+      }
     }
     if (bytes <= effMax) broadcast(pinned)
     else {

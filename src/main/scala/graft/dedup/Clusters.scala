@@ -1,8 +1,15 @@
 package graft.dedup
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Duplicate-cluster resolution: near-dup PAIRS (from MinHash/SimHash/
   * embedding banding) → connected components → one canonical
@@ -24,113 +31,195 @@ import org.apache.spark.sql.functions._
   * a chain of borderline near-dups makes diameter, not log n, the
   * round bound).
   *
+  * The rounds run on typed `RDD[(Long, Long)]` edges, not DataFrames.
+  * A round is the paper's MapReduce round: one lazy lineage (neighborhood
+  * minima by `reduceByKey`, partitioner-aligned hash probes, an
+  * in-partition `distinct`) and ONE Spark job, which pins the round and
+  * fingerprints it. The same round as a DataFrame plan costs about six
+  * jobs (each AQE exchange its own job, plus the checkpoint and the
+  * fingerprint) and is planned, re-planned and code-generated again
+  * every round; the RDD round has no Catalyst planning, no AQE re-plan
+  * and no generated class, and its shuffles of `Long` pairs take
+  * Spark's built-in Kryo path for primitives instead of Java
+  * serialization.
+  *
   * Scale notes:
-  *  - each round is two groupBy-min + two joins over the EDGE table
-  *    (bounded by the near-dup pair count, orders of magnitude smaller
-  *    than the corpus), all declarative — nothing is collected and
-  *    nothing is broadcast;
+  *  - each round shuffles the edge table (bounded by the near-dup pair
+  *    count, orders of magnitude smaller than the corpus) three times;
+  *    nothing is collected and nothing is broadcast — the probes' build
+  *    sides are one `Long` per node per partition, so a hub's edge list
+  *    is never buffered;
   *  - edge counts are non-increasing round over round (stars only
   *    shrink), so the first round bounds every intermediate;
-  *  - `localCheckpoint` after each round truncates lineage, or Catalyst
-  *    re-analysis cost grows quadratically with iteration count (the
-  *    standard iterative-DataFrame pattern; swap for `checkpoint(dir)`
-  *    on a real cluster if executor loss during the loop matters);
-  *  - convergence is detected by a constant-size fingerprint aggregate
-  *    (edge count + hash sum) — the driver loop carries two longs per
-  *    round, no data.
+  *  - each round is `localCheckpoint`ed, which cuts its lineage, and the
+  *    round before it is unpersisted once the new blocks exist: the
+  *    loop holds the input pin and one round, however many rounds run
+  *    (swap for `checkpoint(dir)` on a real cluster if executor loss
+  *    during the loop matters);
+  *  - convergence is detected by a constant-size fingerprint (edge count
+  *    + XOR of edge hashes) — the driver loop carries two longs per
+  *    round, no data;
+  *  - a loop that reaches `maxIter` before the fixpoint throws: its
+  *    labels could split a component, and they feed the keep/drop list
+  *    and the leakage-safe split.
   */
 object Clusters {
 
   /** Connected components of the undirected graph given by `edges`.
-    * Returns (id, comp) with `comp` = min node id in the component.
-    * Nodes appearing only in self-pairs label themselves. */
+    * Returns (id, comp) with `comp` = min node id in the component, both
+    * of the ids' own type (the type the two columns coerce to). Nodes
+    * appearing only in self-pairs label themselves; a null id is not a
+    * node. Integral ids run as they are (widened to `Long`); any other
+    * orderable type — strings first of all — is numbered densely in
+    * Spark SQL's own order first and mapped back at the end, so `comp`
+    * is the id SQL's `min` picks.
+    *
+    * Eager: the star rounds run here, one Spark job each; the returned
+    * frame derives the labels lazily from the last round. Throws
+    * `IllegalStateException` when `maxIter` rounds end before the
+    * fixpoint. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
                           maxIter: Int = 25): DataFrame = {
-    // ids keep their own type: greatest/least/min and xxhash64 are
-    // defined for any orderable column (a cast to long would silently
-    // null out string ids)
-    //
-    // Materialized ONCE, up front: `edges` is typically the tail of a
-    // whole near-dup pipeline (shingle → signature → band join) whose
-    // cost dwarfs everything below. Both derived tables (the node set
-    // and the oriented edge set) used to carry their own eager
-    // localCheckpoint, which evaluated that pair lineage TWICE per
-    // query — the r15 profile showed q_dup_clusters at ~82 CPU-s vs
-    // q_dedup_minhash's ~30 for the identical pair stage.
-    val raw = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .localCheckpoint(true)
-
-    // Every labeled node, kept aside so self-pair-only nodes still get a
-    // (singleton) component at the end. Derived lazily from the `raw`
-    // checkpoint — only consumed by the final label join.
-    val nodes = raw.select(col("u").as("id"))
-      .union(raw.select(col("v").as("id")))
-      .distinct()
-
-    // Orient big→small and drop self-loops; this is already the
-    // invariant both star steps emit, so round 1 sees canonical input.
-    var e = raw.filter(col("u") =!= col("v"))
-      .select(greatest(col("u"), col("v")).as("u"),
-        least(col("u"), col("v")).as("v"))
-      .distinct()
-      .localCheckpoint(true)
-
-    // Probabilistic set-equality check between rounds: (count, XOR of
-    // 64-bit edge hashes — order-independent and overflow-free under
-    // ANSI; the edge set is distinct so self-cancellation cannot hide a
-    // change of the same cardinality except by 2^-64 collision, and
-    // `maxIter` backstops even that). Replaces a join-against-previous-
-    // labels job per round.
-    def fingerprint(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(expr("bit_xor(xxhash64(u, v))"), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
+    val spark = edges.sparkSession
+    val uv = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
+    val idType = uv.select(col("u")).union(uv.select(col("v")))
+      .schema.head.dataType
+    idType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        longFrame(spark, components(longPairs(uv, "u", "v"), maxIter),
+            "id", "comp")
+          .select(col("id").cast(idType), col("comp").cast(idType))
+      case _ =>
+        // read by the numbering and by the edge mapping below
+        val pinned = uv
+          .select(col("u").cast(idType).as("u"), col("v").cast(idType).as("v"))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val ids = pinned.select(col("u").as("id"))
+          .union(pinned.select(col("v").as("id")))
+          .where(col("id").isNotNull).distinct()
+        // dense numbering in SQL order: a range-partitioned sort, then
+        // per-partition offsets — the min index is the SQL-min id
+        val dict = spark.createDataFrame(
+            ids.orderBy(col("id")).rdd.zipWithIndex()
+              .map { case (r, i) => Row(r.get(0), i) },
+            StructType(Seq(StructField("id", idType, nullable = false),
+              StructField("ix", LongType, nullable = false))))
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        def index(c: String) =
+          dict.select(col("id").as(c), col("ix").as(s"i$c"))
+        val numbered = pinned
+          .join(index("u"), Seq("u"), "left")
+          .join(index("v"), Seq("v"), "left")
+        longFrame(spark, components(longPairs(numbered, "iu", "iv"), maxIter),
+            "i", "c")
+          .join(dict.select(col("ix").as("i"), col("id")), "i")
+          .join(dict.select(col("ix").as("c"), col("id").as("comp")), "c")
+          .select(col("id"), col("comp"))
     }
+  }
 
+  /** Columns `a` and `b` of `df` as `Long` pairs. A row with one null
+    * endpoint keeps the other as a self-pair (a node with no edge); a
+    * row with two nulls is dropped. */
+  private def longPairs(df: DataFrame, a: String, b: String)
+      : RDD[(Long, Long)] =
+    df.select(col(a).cast(LongType), col(b).cast(LongType))
+      .queryExecution.toRdd.flatMap { r =>
+        (r.isNullAt(0), r.isNullAt(1)) match {
+          case (false, false) => Some((r.getLong(0), r.getLong(1)))
+          case (false, true) => Some((r.getLong(0), r.getLong(0)))
+          case (true, false) => Some((r.getLong(1), r.getLong(1)))
+          case _ => None
+        }
+      }
+
+  /** `rows` as a frame of two non-null `Long` columns `a` and `b`. */
+  private def longFrame(spark: SparkSession, rows: RDD[(Long, Long)],
+                        a: String, b: String): DataFrame =
+    spark.createDataFrame(rows.map { case (x, y) => Row(x, y) },
+      StructType(Seq(StructField(a, LongType, nullable = false),
+        StructField(b, LongType, nullable = false))))
+
+  /** (node, component minimum) for every node of `pairs`. Between rounds
+    * the edge set is held as (smaller, larger) pairs, deduplicated and
+    * hash-partitioned on the smaller endpoint — the layout the next
+    * round's large-star probe reads without a shuffle. */
+  private def components(pairs: RDD[(Long, Long)],
+                         maxIter: Int): RDD[(Long, Long)] = {
+    val input = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    // the input's own partitioning (AQE-sized upstream) sets the width
+    val part = new HashPartitioner(math.max(1, input.getNumPartitions))
+    def settle(es: RDD[(Long, Long)]) = es.partitionBy(part).distinct()
+
+    var e = settle(input.flatMap { case (u, v) =>
+      if (u < v) Some((u, v)) else if (v < u) Some((v, u)) else None
+    })
     var prev = (-1L, -1L)
-    var cur = fingerprint(e)
+    var cur = pinAndFingerprint(e)
     var iter = 0
     while (cur != prev && iter < maxIter) {
-      // large-star: m(u) = min(neighborhood(u) ∪ {u}); every neighbor
-      // v > u links to m. Emitted edges are (v, m) with v > m, so the
-      // big→small orientation is preserved by construction.
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val lsMin = sym.groupBy("u").agg(min("v").as("mv"))
-        .select(col("u"), least(col("mv"), col("u")).as("m"))
-      val large = sym.join(lsMin, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .distinct()
-
-      // small-star: edges are oriented u > v, so every neighbor of u in
-      // this direction is "small"; u and all of them link to the min.
-      val ssMin = large.groupBy("u").agg(min("v").as("m"))
-      val withM = large.join(ssMin, "u")
-      e = withM.select(col("u"), col("m").as("v"))
-        .union(withM.select(col("v").as("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-        .localCheckpoint(true)
-
+      // large-star: m(b) = min(b, b's smaller neighbors); every edge
+      // (b, a) with a > b becomes the edge a–m(b), keyed here by a
+      val smallerMin = e.map(_.swap).reduceByKey(part, math.min(_, _))
+      val large = probeMin(e, smallerMin).map { case (_, a, mb) => (a, mb) }
+      // small-star: keyed on the larger endpoint a, every small neighbor
+      // mb of a and a itself link to m(a) = min of those neighbors
+      val byLarge = large.partitionBy(part)
+      val next = settle(
+        probeMin(byLarge, byLarge.reduceByKey(part, math.min(_, _)))
+          .flatMap { case (a, mb, m) =>
+            if (mb == m) Iterator((m, a)) else Iterator((m, a), (m, mb))
+          })
       prev = cur
-      cur = fingerprint(e)
+      cur = pinAndFingerprint(next)
+      e.unpersist(blocking = false)
+      e = next
       iter += 1
     }
-
     if (cur != prev)
-      System.err.println(s"[graft] connectedComponents: maxIter=$maxIter " +
-        "reached before the star fixpoint — labels below are the best " +
-        "lower bound, components may still be split")
+      throw new IllegalStateException(s"connectedComponents: maxIter=" +
+        s"$maxIter rounds ended before the star fixpoint (last two " +
+        s"fingerprints (edges, hash) $prev and $cur); its labels could " +
+        "split a component")
 
-    // Fixpoint: a union of stars (leaf u → center v = component min).
-    // The min-aggregate (not distinct) keeps the output WELL-FORMED —
-    // exactly one label per node — even if the loop exited via maxIter
-    // with some node still pointing at two provisional centers.
-    val labels = e.select(col("u").as("id"), col("v").as("comp"))
-      .union(e.select(col("v").as("id"), col("v").as("comp")))
-      .groupBy(col("id")).agg(min(col("comp")).as("comp"))
-    nodes.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    // fixpoint: a union of stars (center c = component min, leaf → c);
+    // every input node offers itself, so self-pair-only nodes label
+    // themselves and the min keeps exactly one label per node
+    e.flatMap { case (c, leaf) => Iterator((leaf, c), (c, c)) }
+      .union(input.flatMap { case (u, v) => Iterator((u, u), (v, v)) })
+      .reduceByKey(part, math.min(_, _))
+  }
+
+  /** `rows` (k, x) with m = `mins`(k), or k itself where `mins` has no
+    * entry. Both sides are hash-partitioned by the same partitioner, so
+    * this is a shuffle-free hash join whose build side is one `Long` per
+    * key of the partition. */
+  private def probeMin(rows: RDD[(Long, Long)], mins: RDD[(Long, Long)])
+      : RDD[(Long, Long, Long)] =
+    rows.zipPartitions(mins) { (rs, ms) =>
+      val m = mutable.LongMap.empty[Long]
+      ms.foreach { case (k, v) => m.update(k, v) }
+      rs.map { case (k, x) => (k, x, m.getOrElse(k, k)) }
+    }
+
+  /** Pins `e` (`localCheckpoint`) and returns its (edge count, XOR of
+    * xxhash64(larger, smaller)) in the same job — equal to SQL's
+    * `bit_xor(xxhash64(u, v))` over the edges with u the larger one. The edge
+    * set is distinct, so a change of the same cardinality hides only by
+    * a 2^-64 collision, and `maxIter` backstops even that. */
+  private def pinAndFingerprint(e: RDD[(Long, Long)]): (Long, Long) = {
+    e.localCheckpoint()
+    e.mapPartitions { it =>
+      var n = 0L
+      var x = 0L
+      it.foreach { case (small, large) =>
+        n += 1
+        x ^= XXH64.hashLong(small, XXH64.hashLong(large, 42L))
+      }
+      Iterator((n, x))
+    }.collect().foldLeft((0L, 0L)) { case ((n, x), (pn, px)) =>
+      (n + pn, x ^ px)
+    }
   }
 
   /** (doc_id, cluster_id, cluster_size) for every doc in some near-dup

@@ -87,4 +87,19 @@ class BroadcastGuardSpec extends SparkSuite {
         s"$q must be result-invariant under the shuffle_hash fallback")
     }
   }
+
+  test("dims off a per-invocation checkpoint leave no memo entry") {
+    // the triangle degree and adjacency dims and the label-prop labels
+    // hang off checkpoints minted per run: memoizing them would pin a
+    // fresh checkpoint in the session-wide map on every run
+    val before = BroadcastGuard.memoEntries
+    for (q <- Seq("q_triangles", "q_label_prop")) {
+      val runs = (1 to 3).map(_ =>
+        SparkEntry.queries(q)(spark, sfDir).collect().map(_.toString).sorted
+          .toSeq)
+      assert(runs.distinct.size == 1, s"$q must give the same rows every run")
+    }
+    assert(BroadcastGuard.memoEntries <= before,
+      s"memo grew from $before to ${BroadcastGuard.memoEntries} entries")
+  }
 }
